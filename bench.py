@@ -74,7 +74,7 @@ HEADLINE = [
     "ts_session_window",         # session windows
     # round-5 additions (new keys — earlier keys stay comparable
     # across rounds; the summed `value` covers whatever is listed):
-    "text_bpe_tokenize",         # subword BPE encode (zero-shuffle map)
+    "text_bpe_tokenize",         # subword BPE encode (spread map)
     "embed_kmeans_assign",       # exact-integer Lloyd k-means
     "q3_bucketed_top_revenue",   # Q3 on bucketed layout (0 fact shuffles)
     # round-6 queue flagships (same new-keys convention as above):

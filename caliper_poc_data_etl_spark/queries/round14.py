@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.registry import query, t
+from caliper_poc_data_etl_spark.queries.registry import query, spread, t
 
 # ---------------------------------------------------------------------------
 # Deterministic HyperLogLog (md5-parity)
@@ -777,17 +777,8 @@ def embed_jl_projection_parity(spark, sf_dir):
     )
     # One-row-group input: without the spread the 16 interpreted HOF
     # folds per row all run in a single task (the r11 lesson; measured
-    # 23 s -> ~1 s at sf0.1). Explicit numPartitions so AQE cannot
-    # coalesce the tiny shuffle back to one task.
-    q = (
-        # Keyed on vec_id: a keyless repartition(n) pays the
-        # sortBeforeRepartition local sort of every (vec_id, embedding)
-        # row for nothing (guide §2.5); unique vec_ids hash evenly.
-        e.repartition(
-            e.sparkSession.sparkContext.defaultParallelism, F.col("vec_id")
-        )
-        .select("vec_id", xm.alias("xm"))
-    )
+    # 23 s -> ~1 s at sf0.1).
+    q = spread(e, "vec_id").select("vec_id", xm.alias("xm"))
 
     def proj(j):
         # ONE parsed expression per projection row instead of JL_D

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.registry import query, t
+from caliper_poc_data_etl_spark.queries.registry import query, spread, t
 
 # ---------------------------------------------------------------------------
 # SemDeDup — semantic dedup over embeddings
@@ -659,7 +659,7 @@ def dedup_cdc_chunks(spark, sf_dir):
     the 8-char window (and empty docs) form one whole-doc chunk via
     the per-doc sentinel cut at position len.
 
-    Scale shape: doc_id repartition BEFORE the position explode (the
+    Scale shape: doc_id :func:`spread` BEFORE the position explode (the
     winnowing lesson — the one-row-group fixture would otherwise run
     every md5 on one task; parallelism must be decided on POST-explode
     volume), the cut filter drops ~31/32 of positions at the map, the
@@ -669,8 +669,7 @@ def dedup_cdc_chunks(spark, sf_dir):
     chunk hashes per doc, partial-aggregated map-side. All arithmetic
     integer; md5 the only hash; no floats anywhere."""
     w, dv = CDC_W, CDC_DIV
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    d = t(spark, sf_dir, "documents").repartition(n_part, "doc_id")
+    d = spread(t(spark, sf_dir, "documents"))
     pos = d.filter(F.length("text") >= w).select(
         "doc_id",
         "text",

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.registry import query, t
+from caliper_poc_data_etl_spark.queries.registry import query, spread, t
 
 # ---------------------------------------------------------------------------
 # Subword BPE tokenization
@@ -83,6 +83,25 @@ def bpe_symbols_expr(col):
     return F.split(F.trim(s), " ")
 
 
+def bpe_encoded(d):
+    """(doc_id, sy): the BPE symbols of every document with a letter.
+
+    The oracle's ``WHERE w <> ''``: a letterless doc would yield
+    sy = [''] after split(trim(' ')). The filter runs on the RAW text
+    (lower(text) contains a letter ⇔ w <> '' ⇔ sy <> ['']) so it is
+    scan-pushable; filtering on the computed sy pushed a second copy
+    of the whole replace chain into the predicate (r12: +1.5 s of the
+    query's 2.2 s at sf0.1). rlike drops NULL-text rows, as the
+    oracle does (regexp_replace(NULL) is NULL).
+
+    The chain then runs above a :func:`spread` exchange, so its 72
+    replaces per row use every core instead of the one task that
+    scans a one-row-group table."""
+    return spread(d.filter(F.lower(F.col("text")).rlike("[a-z]"))).select(
+        "doc_id", bpe_symbols_expr(F.lower(F.col("text"))).alias("sy")
+    )
+
+
 def _bpe_oracle() -> str:
     rep = "' ' || regexp_replace(w, '(.)', '\\1 ', 'g')"
     for a, b in BPE_MERGES:
@@ -127,37 +146,21 @@ def text_bpe_tokenize(spark, sf_dir):
     the un-mergeable word boundary, then maps symbols to vocabulary
     ids (a-z = 1..26, merge products 27+ in rank order).
 
-    Scale shape: the entire encode is ONE narrow projection — no
-    explode, no join, no shuffle; per-row cost is linear in document
-    length and the plan is a single WholeStageCodegen map over the
-    scan. The vocab lookup is a literal map expression, not a join.
-    Cross-engine determinism: literal-string replaces with identical
-    left-to-right non-overlapping semantics in both engines, so even
-    the documented >15-repeated-pair degradation case agrees
-    byte-for-byte. (A ``_spread`` repartition was measured here in
-    r11 and reverted: the per-trial floor is the deep replace-chain
-    expression analysis, not task parallelism — the shuffle bought
-    nothing.)"""
-    d = t(spark, sf_dir, "documents")
+    Scale shape: the encode is one per-row projection (no explode, no
+    join); per-row cost is linear in document length, and the vocab
+    lookup is a literal map expression, not a join. The only shuffle
+    is the :func:`bpe_encoded` spread of (doc_id, text) below the
+    chain. Cross-engine determinism: literal-string replaces with
+    identical left-to-right non-overlapping semantics in both engines,
+    so even the documented >15-repeated-pair degradation case agrees
+    byte-for-byte. (r11 measured the spread with ``count()``, which
+    prunes the whole chain, and saw no gain. Timed with a noop write
+    at sf0.1 on 4 cores, the query falls from 3.0 s on the one scan
+    task to 0.85–1.3 s spread.)"""
     vmap = F.create_map(
         *[x for sym, sid in BPE_VOCAB.items() for x in (F.lit(sym), F.lit(sid))]
     )
-    syms = bpe_symbols_expr(F.lower(F.col("text")))
-    # oracle's WHERE w <> '' parity: a letterless doc yields sy = ['']
-    # after split(trim(' ')) — exclude exactly those rows. r12: filter
-    # on the RAW text (lower(text) contains a letter ⇔ w <> '' ⇔
-    # sy <> ['']) BEFORE the symbol chain: filtering on the computed
-    # sy pushed a second copy of the whole replace chain into the
-    # predicate (measured +1.5 s of the query's 2.2 s at sf0.1); the
-    # raw-text predicate is scan-pushable and the chain now evaluates
-    # once, in the projection. ADVICE r12 NULL note: rlike drops
-    # NULL-text rows, which the old size(sy)-based exclusion kept
-    # (size(NULL) = -1 non-ANSI) — that is an ORACLE-PARITY fix, not
-    # just perf: the oracle's WHERE w <> '' never emits NULL-text
-    # docs either (regexp_replace(NULL) is NULL).
-    base = d.filter(F.lower(F.col("text")).rlike("[a-z]")).select(
-        "doc_id", syms.alias("sy")
-    )
+    base = bpe_encoded(t(spark, sf_dir, "documents"))
     sub = F.filter(F.col("sy"), lambda x: x != "|")
     return base.select(
         "doc_id",
@@ -704,17 +707,12 @@ def text_bpe_pair_stats(spark, sf_dir):
     merge is the whole training loop; declaring it as graded surface
     proves the engine can run that loop distributed.
 
-    Scale shape: encode is the same zero-shuffle projection as
-    text_bpe_tokenize; pairs explode linearly in token count and
-    reduce through ONE partial-aggregated groupBy on (left, right) —
-    the canonical word-count shape. Deterministic top-N via
-    (count desc, pair asc)."""
-    d = t(spark, sf_dir, "documents")
-    sy = bpe_symbols_expr(F.lower(F.col("text")))
-    # Letterless-doc filter on the RAW text (⇔ sy == ['']), same r12
-    # rewrite as text_bpe_tokenize: keeps the replace chain out of the
-    # pushed-down predicate so it evaluates once.
-    enc = d.filter(F.lower(F.col("text")).rlike("[a-z]")).select(sy.alias("sy"))
+    Scale shape: encode is the same spread projection as
+    text_bpe_tokenize (:func:`bpe_encoded`); pairs explode linearly in
+    token count and reduce through ONE partial-aggregated groupBy on
+    (left, right) — the canonical word-count shape. Deterministic
+    top-N via (count desc, pair asc)."""
+    enc = bpe_encoded(t(spark, sf_dir, "documents"))
     syc = F.col("sy")
     pairs = enc.select(
         F.explode(

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.registry import query, t
+from caliper_poc_data_etl_spark.queries.registry import query, spread, t
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
@@ -2560,13 +2560,12 @@ def decontam_bloom_ngram(spark, sf_dir):
     decontamination shape that works — the reason GPT-3's paper
     describes exactly this filter.
 
-    The corpus repartitions by doc_id BEFORE the shingle explode
-    (the winnowing/BPE-trainer r11 lesson): the driver fixture is one
+    The corpus is spread by doc_id BEFORE the shingle explode (the
+    winnowing/BPE-trainer r11 lesson): the sf fixture is one
     small parquet file, so the explode and its 7 md5 probes per
     shingle otherwise run on ONE task; the explode is the
     row-expander, so parallelism is decided on post-explode volume."""
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    d = t(spark, sf_dir, "documents").repartition(n_part, "doc_id")
+    d = spread(t(spark, sf_dir, "documents"))
     tk = F.filter(F.split(F.lower("text"), "[^a-z]+"), lambda x: x != "")
     toks = d.select("doc_id", tk.alias("tk")).filter(F.size("tk") >= _DBL_N)
     sh = toks.select(

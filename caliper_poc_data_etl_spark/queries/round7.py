@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.registry import query, t
+from caliper_poc_data_etl_spark.queries.registry import query, spread, t
 
 # ---------------------------------------------------------------------------
 # Correlated LATERAL top-k join
@@ -367,17 +367,16 @@ def text_winnowing_fingerprint(spark, sf_dir):
     lag(min_key)` is exactly DISTINCT with zero extra shuffle or
     aggregation state.
 
-    Scale shape: the doc_id shuffle happens BEFORE the char-gram
-    explode (explicit numPartitions from shuffle.partitions — the
-    pre-explode input is tiny, so AQE would otherwise coalesce the
-    fan-out stage onto one task and serialize all the hashing; the
-    explode is the row-expander, so parallelism must be decided on
-    the POST-explode volume), which also pre-satisfies both window
-    passes — ONE exchange total, frames w-bounded, per-frame state
-    two longs, no aggregate anywhere."""
+    Scale shape: the doc_id :func:`spread` happens BEFORE the
+    char-gram explode (an explicit partition count — the pre-explode
+    input is tiny, so AQE would otherwise coalesce the fan-out stage
+    onto one task and serialize all the hashing; the explode is the
+    row-expander, so parallelism must be decided on the POST-explode
+    volume), which also pre-satisfies both window passes — ONE
+    exchange total, frames w-bounded, per-frame state two longs, no
+    aggregate anywhere."""
     shift = 1 << 22  # packed-position field; > max doc length
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    d = (
+    d = spread(
         t(spark, sf_dir, "documents")
         .filter(F.length("text") >= WIN_K + WIN_W - 1)
         # ADVICE r11: the 22-bit position field fails LOUDLY past its
@@ -395,7 +394,6 @@ def text_winnowing_fingerprint(spark, sf_dir):
                 ),
             ).isNull()
         )
-        .repartition(n_part, "doc_id")
     )
     pos = d.select(
         "doc_id",
@@ -2409,31 +2407,26 @@ def text_bpe_train_merges(spark, sf_dir):
     non-overlapping replace are the declared semantics, identical in
     both engines.
 
-    The corpus is REPARTITIONED once before the loop (explicit
-    numPartitions from shuffle.partitions): the driver fixture is one
-    small parquet file and localCheckpoint PRESERVES its single
-    partition, so every round's symbol split, pair explode, and merge
-    replace otherwise run on ONE task for the whole training loop —
-    the winnowing pre-explode lesson (round7 r11); measured ~267 s →
-    ~13 s at sf0.1. One 5000-row shuffle buys 3 rounds × full-corpus
-    parallelism; at 100 TB the input arrives multi-split and the
-    repartition is a no-op by cost."""
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    The corpus is :func:`spread` once before the loop: the sf
+    fixture is one small parquet file and localCheckpoint PRESERVES
+    its single partition, so every round's symbol split, pair explode,
+    and merge replace otherwise run on ONE task for the whole training
+    loop — the winnowing pre-explode lesson (round7 r11); measured
+    ~267 s → ~13 s at sf0.1. One 5000-row shuffle buys 3 rounds ×
+    full-corpus parallelism; at 100 TB the input arrives multi-split
+    and the spread is a no-op by cost."""
     d = t(spark, sf_dir, "documents")
     w = F.regexp_replace(
         F.regexp_replace(F.lower(F.col("text")), "[^a-z]+", "|"),
         "^\\||\\|$",
         "",
     )
-    docs = (
+    docs = spread(
         d.select(
             "doc_id",
             F.concat(F.lit(" "), F.regexp_replace(w, "(.)", "$1 ")).alias("s"),
-        )
-        .filter(F.trim("s") != "")
-        .repartition(n_part, "doc_id")
-        .localCheckpoint(eager=True)
-    )
+        ).filter(F.trim("s") != "")
+    ).localCheckpoint(eager=True)
     merges = None
     for r in range(1, BPE_TRAIN_ROUNDS + 1):
         sy = F.split(F.trim(F.col("s")), " ")

@@ -13,6 +13,8 @@ Reference parity notes:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -61,6 +63,12 @@ def read_csv(
     referenced columns only include the internal corrupt record
     column") — reference a data column or use ``dropmalformed`` for
     pure row counting.
+
+    CSV column pruning is off for this read (``columnPruning=false``),
+    whatever the session default: with it on, the parser only checks
+    the columns a query reads, so whether a short or long row counts
+    as malformed would depend on the query. Every mode here judges a
+    row by its full width, as the reference's regex does.
     """
     mode = mode.lower()
     if mode not in {"permissive", "dropmalformed", "failfast"}:
@@ -75,6 +83,7 @@ def read_csv(
         .option("header", header)
         .option("mode", mode.upper())
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .option("columnPruning", False)
         .csv(path)
     )
     if mode == "permissive" and not keep_corrupt:
@@ -159,7 +168,9 @@ def normalize_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Parquet schema cache, keyed on the table path. METADATA only — the
+# Parquet schema cache, keyed on the table path and its modification
+# time and size, so a path rewritten in place (a new dataset directory,
+# or a new file) re-infers its schema. METADATA only — the
 # stand-in for the table schemas a real deployment declares in its
 # metastore instead of re-inferring from footers on every query.
 # ``spark.read.parquet(path)`` runs a driver-side footer-read job per
@@ -170,7 +181,17 @@ def normalize_ts(df: DataFrame) -> DataFrame:
 # parquet bytes — and the cache dies with the process. The cached
 # schema is exactly what inference produced for that path under the
 # fixture confs, so read semantics are identical by construction.
-_SCHEMA_CACHE: dict[str, T.StructType] = {}
+_SCHEMA_CACHE: dict[tuple[str, int | None, int | None], T.StructType] = {}
+
+
+def _schema_key(path: str) -> tuple[str, int | None, int | None]:
+    """(path, mtime_ns, size); a path this process cannot stat (a
+    remote URI) keys on the path alone."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return (path, None, None)
+    return (path, st.st_mtime_ns, st.st_size)
 
 
 def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -180,10 +201,11 @@ def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (:func:`apply_fixture_confs`)."""
     apply_fixture_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    schema = _SCHEMA_CACHE.get(path)
+    key = _schema_key(path)
+    schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        _SCHEMA_CACHE[key] = df.schema
     else:
         df = spark.read.schema(schema).parquet(path)
     return normalize_ts(df)

@@ -28,7 +28,8 @@ def read_assessments_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """CSV-drop stream with the engine's observable corrupt-row policy
-    (PERMISSIVE + explicit filter), matching the batch reader."""
+    (PERMISSIVE + explicit filter, CSV column pruning off), matching
+    the batch reader."""
     schema = T.StructType(
         list(ASSESSMENTS_FIDELITY.fields)
         + [T.StructField(CORRUPT_COL, T.StringType(), True)]
@@ -38,6 +39,7 @@ def read_assessments_stream(
         .option("header", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .option("columnPruning", False)
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -148,6 +148,26 @@ class TestItemsPipeline:
         total = grouped.agg(F.sum(F.size("events"))).collect()[0][0]
         assert total == 3
 
+    def test_short_row_dropped_under_session_column_pruning(self, spark, tmp_path):
+        """A stale 10-column row is malformed whatever the session's CSV
+        column-pruning default: read_csv turns pruning off per read."""
+        csv = tmp_path / "items.csv"
+        csv.write_text(
+            ITEMS_CSV.splitlines()[0]
+            + "\n"
+            + ITEMS_CSV.splitlines()[2]
+            + "\nstu-3,login-3,sch-9,asmt-01,1.0,att-300,item-03,1,5,TRUEFALSE\n"
+        )
+        key = "spark.sql.csv.parser.columnPruning.enabled"
+        before = spark.conf.get(key)
+        spark.conf.set(key, "true")
+        try:
+            items = read_csv(spark, str(csv), ASSESSMENT_ITEMS_FIDELITY)
+            events = item_outcome_events(items).collect()
+        finally:
+            spark.conf.set(key, before)
+        assert [e["attempt_id"] for e in events] == ["att-100"]
+
 
 class TestAssessmentsPipeline:
     def test_fanout_and_envelopes(self, spark, assessments_csv):

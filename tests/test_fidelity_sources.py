@@ -5,6 +5,8 @@ Each case encodes a *measured* reference behavior from FIXTURES.md §5.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from caliper_poc_data_etl_spark.sources.fidelity import (
@@ -13,6 +15,7 @@ from caliper_poc_data_etl_spark.sources.fidelity import (
 )
 
 HEADER_ITEMS = "identity_id,login_identity_id,school_id,assessment_id,assessment_version,attempt_id,assmtitem_id,assmtitem_version,assessment_type_id,response_type,question_time,score_posible,score_earned,masterobjectives,masterobjectivesid,objectivenumber"
+FIXTURES = Path(__file__).parent / "fixtures"
 ROW_OK = "stu-1,login-1,sch-9,asmt-01,1.0,att-100,item-02,1,5,TRUEFALSE,12,5,3,Algebra Basics,101,1.2"
 
 
@@ -38,8 +41,8 @@ class TestItemsFidelityScan:
         assert read_items_fidelity(spark, path).count() == 0
 
     def test_stale_bundled_sample_yields_zero(self, spark):
-        """F1/§3.3: the reference's own 10-col sample → zero rows."""
-        assert read_items_fidelity(spark, "/root/reference/assessmentitems.csv").count() == 0
+        """F1/§3.3: a 10-col sample shaped like the reference's → zero rows."""
+        assert read_items_fidelity(spark, str(FIXTURES / "assessmentitems.csv")).count() == 0
 
     def test_greedy_col14_absorbs_commas(self, spark, tmp_path):
         """S4: unquoted comma in free-text col 14 absorbed by `(.*)`."""
@@ -92,8 +95,5 @@ class TestAssessmentsFidelityScan:
         assert got["identity_id"] == "extra,stu-1"
 
     def test_stale_bundled_sample_yields_zero(self, spark):
-        """F1: 8-col bundled sample → zero rows survive the 13-group regex."""
-        assert (
-            read_assessments_fidelity(spark, "/root/reference/assessments.csv").count()
-            == 0
-        )
+        """F1: 8-col sample → zero rows survive the 13-group regex."""
+        assert read_assessments_fidelity(spark, str(FIXTURES / "assessments.csv")).count() == 0

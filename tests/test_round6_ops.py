@@ -6,6 +6,8 @@ fewer Exchanges, values identical to the plain q3).
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -75,6 +77,29 @@ class TestBpeTokenize:
                 if s != "|":
                     assert s in BPE_VOCAB, s
         assert len(inv) == len(BPE_VOCAB)  # ids are unique
+
+    @pytest.mark.parametrize("name", ["text_bpe_tokenize", "text_bpe_pair_stats"])
+    def test_encode_runs_above_spread(self, spark, sf_dir, name):
+        """The replace chain is evaluated once, in a Project above the
+        doc_id spread Exchange; the filter above the scan is chain-free."""
+        df = QUERIES[name].spark(spark, sf_dir)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0].splitlines()
+        chain = [i for i, line in enumerate(final) if "replace(" in line]
+        assert len(chain) == 1, plan
+        project = final[chain[0]]
+        assert re.match(r"[\s+\-:|*()\d]*Project \[", project), project
+        n = spark.sparkContext.defaultParallelism
+        exchange = re.compile(rf"Exchange hashpartitioning\(doc_id#\d+L?, {n}\)")
+        below = final[chain[0] + 1 :]
+        hits = [i for i, line in enumerate(below) if exchange.search(line)]
+        assert hits, plan
+        depth = len(project) - len(project.lstrip(" +-|:"))
+        ex_line = below[hits[0]]
+        assert len(ex_line) - len(ex_line.lstrip(" +-|:")) > depth
+        filters = [line for line in below[hits[0] :] if "Filter (" in line]
+        assert filters and not any("replace(" in f for f in filters), plan
 
     def test_graded_output_ids_decode(self, spark, sf_dir):
         out = QUERIES["text_bpe_tokenize"].spark(spark, sf_dir).limit(20).collect()
