@@ -40,8 +40,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -403,144 +405,155 @@ def main() -> int:
         file=sys.stderr,
     )
 
-    csv_100k = _caliper_csv(CALIPER_ROWS)
-    # The 100k e2e is a ~1 s query, so with 3 trials one first-trial
-    # JIT/page-cache outlier sets the median (r6 spread:
-    # 3.005/1.477/1.236). VERDICT r6 #2: give it 5-7 trials so the
-    # median measures the engine, not the warmup, even on a degraded
-    # host. SPARK_GRAFT_BENCH_TRIALS still raises it further.
-    trials_100k = max(trials_n, 7)
-    caliper_wall, caliper_rps, walls_100k, med_100k = _caliper_trials(
-        spark, CALIPER_ROWS, "reference", csv_100k, trials_100k,
-        "caliper_items_100k_e2e (reference single-core baseline: 154k rows/s)",
-    )
-    big_csv = _caliper_csv(CALIPER_ROWS_BIG)
-    # Key the summed headline entry on the MEDIAN like every other
-    # headline query — a min among medians would make the total a
-    # mixed statistic and round-over-round comparisons mislabeled.
-    # The min stays in caliper_items_100k_min_sec + trial_times.
-    timings["caliper_items_100k_e2e"] = med_100k
-    timings_trimmed["caliper_items_100k_e2e"] = _trimmed_median(walls_100k)
-    trial_times["caliper_items_100k_e2e"] = walls_100k
-    # 1M-row entries live OUTSIDE the summed headline (the sf0.1 query
-    # wall) so the round-over-round `value` stays comparable; rows/s is
-    # their meaningful axis. reference layout = file-per-attempt parity;
-    # bulk = the engine's scale layout (see sinks.write_grouped_json).
-    # These key on MEDIAN, so they get >=5 trials too: with 3, a single
-    # host metadata-throttle stall (documented 30-60x single-trial
-    # outliers; an 86 s trial observed in r7) sets the median.
-    trials_1m = max(trials_n, 5)
-    # The grouped (reference) layout's 5000-file sink is the one entry
-    # where the host's metadata throttle can land 30-86 s stalls INSIDE
-    # the median (r8: trials [2.19, 2.60, 30.53, 25.67, 18.41] put an
-    # 18 s stall at position 3 of 5). VERDICT r8 #4: give it enough
-    # trials that the median is a throughput read, not a stall read —
-    # AND report a stall-trimmed median alongside (trim rule: drop
-    # trials > 5x the min, the documented 10-40x stall class; every
-    # raw trial stays in trial_times — no silent trimming).
-    trials_1m_grouped = max(trials_n, 9)
-    big_wall, big_rps, walls_1m, med_1m = _caliper_trials(
-        spark, CALIPER_ROWS_BIG, "reference", big_csv, trials_1m_grouped,
-        "caliper_items_1m_e2e (reference layout, 5000 durable files)",
-    )
-    trial_times["caliper_items_1m_e2e"] = walls_1m
-    nonstall_1m = [w for w in walls_1m if w <= 5 * min(walls_1m)]
-    med_1m_trimmed = round(statistics.median(nonstall_1m), 3)
-    print(
-        f"# caliper_items_1m_e2e stall-trimmed median {med_1m_trimmed}s "
-        f"over {len(nonstall_1m)}/{len(walls_1m)} non-stall trials "
-        f"(trim rule: > 5x min = {5 * min(walls_1m):.1f}s)",
-        file=sys.stderr,
-    )
-    bulk_wall, bulk_rps, walls_bulk, med_bulk = _caliper_trials(
-        spark, CALIPER_ROWS_BIG, "bulk", big_csv, trials_1m,
-        "caliper_items_1m_bulk_e2e (JSON-lines scale layout)",
-    )
-    trial_times["caliper_items_1m_bulk_e2e"] = walls_bulk
-    # Input-layout experiment (outside the headline sum): the driver's
-    # sf0.1 parquet is ONE row group per table, so any scan decodes on
-    # a single task no matter the plan (DuckDB's intra-rowgroup
-    # parallelism hides this; Spark's split unit is the row group).
-    # Re-laying the fact table out with the engine's own compaction
-    # operator shows the same q1 plan with real scan parallelism.
-    import tempfile
-
-    from caliper_poc_data_etl_spark.sinks import compact_files
-
-    relaid = tempfile.mkdtemp(prefix="bench_relayout_") + "/lineitem"
-    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").repartition(16).write.mode(
-        "overwrite"
-    ).parquet(relaid)
-    q1_relaid = None
-    if "q1_pricing_summary" in timings:
-        from pyspark.sql import functions as F
-
-        li = spark.read.parquet(relaid)
-        t0 = time.perf_counter()
-        (
-            li.filter(F.col("l_shipdate") <= "1998-09-02")
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.sum("l_quantity"),
-                F.sum("l_extendedprice"),
-                F.avg("l_discount"),
-                F.count("*"),
-            )
-            .collect()
+    # Every input/staging dir this run creates is removed at the end,
+    # even when a query or trial raises.
+    tmp_dirs: list[str] = []
+    try:
+        csv_100k = _caliper_csv(CALIPER_ROWS)
+        tmp_dirs.append(os.path.dirname(csv_100k))
+        # The 100k e2e is a ~1 s query, so with 3 trials one first-trial
+        # JIT/page-cache outlier sets the median (r6 spread:
+        # 3.005/1.477/1.236). VERDICT r6 #2: give it 5-7 trials so the
+        # median measures the engine, not the warmup, even on a degraded
+        # host. SPARK_GRAFT_BENCH_TRIALS still raises it further.
+        trials_100k = max(trials_n, 7)
+        caliper_wall, caliper_rps, walls_100k, med_100k = _caliper_trials(
+            spark, CALIPER_ROWS, "reference", csv_100k, trials_100k,
+            "caliper_items_100k_e2e (reference single-core baseline: 154k rows/s)",
         )
-        q1_relaid = round(time.perf_counter() - t0, 3)
+        big_csv = _caliper_csv(CALIPER_ROWS_BIG)
+        tmp_dirs.append(os.path.dirname(big_csv))
+        # Key the summed headline entry on the MEDIAN like every other
+        # headline query — a min among medians would make the total a
+        # mixed statistic and round-over-round comparisons mislabeled.
+        # The min stays in caliper_items_100k_min_sec + trial_times.
+        timings["caliper_items_100k_e2e"] = med_100k
+        timings_trimmed["caliper_items_100k_e2e"] = _trimmed_median(walls_100k)
+        trial_times["caliper_items_100k_e2e"] = walls_100k
+        # 1M-row entries live OUTSIDE the summed headline (the sf0.1 query
+        # wall) so the round-over-round `value` stays comparable; rows/s is
+        # their meaningful axis. reference layout = file-per-attempt parity;
+        # bulk = the engine's scale layout (see sinks.write_grouped_json).
+        # These key on MEDIAN, so they get >=5 trials too: with 3, a single
+        # host metadata-throttle stall (documented 30-60x single-trial
+        # outliers; an 86 s trial observed in r7) sets the median.
+        trials_1m = max(trials_n, 5)
+        # The grouped (reference) layout's 5000-file sink is the one entry
+        # where the host's metadata throttle can land 30-86 s stalls INSIDE
+        # the median (r8: trials [2.19, 2.60, 30.53, 25.67, 18.41] put an
+        # 18 s stall at position 3 of 5). VERDICT r8 #4: give it enough
+        # trials that the median is a throughput read, not a stall read —
+        # AND report a stall-trimmed median alongside (trim rule: drop
+        # trials > 5x the min, the documented 10-40x stall class; every
+        # raw trial stays in trial_times — no silent trimming).
+        trials_1m_grouped = max(trials_n, 9)
+        big_wall, big_rps, walls_1m, med_1m = _caliper_trials(
+            spark, CALIPER_ROWS_BIG, "reference", big_csv, trials_1m_grouped,
+            "caliper_items_1m_e2e (reference layout, 5000 durable files)",
+        )
+        trial_times["caliper_items_1m_e2e"] = walls_1m
+        nonstall_1m = [w for w in walls_1m if w <= 5 * min(walls_1m)]
+        med_1m_trimmed = round(statistics.median(nonstall_1m), 3)
         print(
-            f"# q1 aggregation on 16-file relayout: {q1_relaid}s "
-            f"(vs {timings['q1_pricing_summary']}s on the single-row-group "
-            f"input — the gap is parquet row-group granularity, not the plan)",
+            f"# caliper_items_1m_e2e stall-trimmed median {med_1m_trimmed}s "
+            f"over {len(nonstall_1m)}/{len(walls_1m)} non-stall trials "
+            f"(trim rule: > 5x min = {5 * min(walls_1m):.1f}s)",
             file=sys.stderr,
         )
-    # VERDICT r12 #5 (scaling_relaid): the sf0.1 fixtures are ONE parquet
-    # row group per table, so 12 of 28 headline queries scan on a single
-    # task no matter the plan (Spark's split unit is the row group; the
-    # 8-vs-32-core ratios sit at ~1 for exactly those queries). This
-    # block stages a multi-row-group relaid COPY of the big tables
-    # (lineitem / orders / documents re-written as 16 files; small
-    # tables symlinked), then times the SAME declared builders against
-    # the relaid dir — OUTSIDE the keyed headline sum, like the q1
-    # experiment above — so the driver's two core-count runs can ratio
-    # them and show the plans parallelize when the input does. Staging
-    # happens fresh inside every bench run (input layout, not results).
-    relaid_sf = tempfile.mkdtemp(prefix="bench_relaid_sf_") + "/sf"
-    os.makedirs(relaid_sf, exist_ok=True)
-    from caliper_poc_data_etl_spark.sources.readers import TABLE_NAMES
+        bulk_wall, bulk_rps, walls_bulk, med_bulk = _caliper_trials(
+            spark, CALIPER_ROWS_BIG, "bulk", big_csv, trials_1m,
+            "caliper_items_1m_bulk_e2e (JSON-lines scale layout)",
+        )
+        trial_times["caliper_items_1m_bulk_e2e"] = walls_bulk
+        # Input-layout experiment (outside the headline sum): the driver's
+        # sf0.1 parquet is ONE row group per table, so any scan decodes on
+        # a single task no matter the plan (DuckDB's intra-rowgroup
+        # parallelism hides this; Spark's split unit is the row group).
+        # Re-laying the fact table out with the engine's own compaction
+        # operator shows the same q1 plan with real scan parallelism.
+        q1_relaid = None
+        if "q1_pricing_summary" in timings:
+            from pyspark.sql import functions as F
 
-    for tbl in TABLE_NAMES:
-        src = f"{SF_DIR}/{tbl}.parquet"
-        dst = f"{relaid_sf}/{tbl}.parquet"
-        if tbl in ("lineitem", "orders", "documents"):
-            spark.read.parquet(src).repartition(16).write.mode(
-                "overwrite"
-            ).parquet(dst)
-        else:
-            os.symlink(os.path.abspath(src), dst)
-    relaid_queries = [
-        "q1_pricing_summary",
-        "q3_top_revenue",
-        "dedup_exact_normalized",
-        "text_winnowing_fingerprint",
-    ]
-    scaling_relaid: dict[str, float] = {}
-    for name in relaid_queries:
-        if name not in qs:
-            continue
-        walls_r: list[float] = []
-        for _ in range(3):
+            tmp_dirs.append(tempfile.mkdtemp(prefix="bench_relayout_"))
+            relaid = tmp_dirs[-1] + "/lineitem"
+            spark.read.parquet(f"{SF_DIR}/lineitem.parquet").repartition(
+                16
+            ).write.mode("overwrite").parquet(relaid)
+            li = spark.read.parquet(relaid)
             t0 = time.perf_counter()
-            qs[name](spark, relaid_sf).count()
-            walls_r.append(round(time.perf_counter() - t0, 3))
-        scaling_relaid[name] = round(statistics.median(walls_r), 3)
-        print(
-            f"# relaid {name}: trials {walls_r} -> median "
-            f"{scaling_relaid[name]:.2f}s (single-row-group headline: "
-            f"{timings.get(name, float('nan')):.2f}s)",
-            file=sys.stderr,
-        )
+            (
+                li.filter(F.col("l_shipdate") <= "1998-09-02")
+                .groupBy("l_returnflag", "l_linestatus")
+                .agg(
+                    F.sum("l_quantity"),
+                    F.sum("l_extendedprice"),
+                    F.avg("l_discount"),
+                    F.count("*"),
+                )
+                .collect()
+            )
+            q1_relaid = round(time.perf_counter() - t0, 3)
+            print(
+                f"# q1 aggregation on 16-file relayout: {q1_relaid}s "
+                f"(vs {timings['q1_pricing_summary']}s on the single-row-group "
+                f"input — the gap is parquet row-group granularity, not the plan)",
+                file=sys.stderr,
+            )
+        # VERDICT r12 #5 (scaling_relaid): the sf0.1 fixtures are ONE parquet
+        # row group per table, so 12 of 28 headline queries scan on a single
+        # task no matter the plan (Spark's split unit is the row group; the
+        # 8-vs-32-core ratios sit at ~1 for exactly those queries). This
+        # block stages a multi-row-group relaid COPY of the big tables
+        # (lineitem / orders / documents re-written as 16 files; small
+        # tables symlinked), then times the SAME declared builders against
+        # the relaid dir — OUTSIDE the keyed headline sum, like the q1
+        # experiment above — so the driver's two core-count runs can ratio
+        # them and show the plans parallelize when the input does. Staging
+        # happens fresh inside every bench run (input layout, not results),
+        # and only when one of the relaid queries is selected.
+        relaid_queries = [
+            n
+            for n in (
+                "q1_pricing_summary",
+                "q3_top_revenue",
+                "dedup_exact_normalized",
+                "text_winnowing_fingerprint",
+            )
+            if n in timings
+        ]
+        if relaid_queries:
+            from caliper_poc_data_etl_spark.sources.readers import TABLE_NAMES
+
+            tmp_dirs.append(tempfile.mkdtemp(prefix="bench_relaid_sf_"))
+            relaid_sf = tmp_dirs[-1] + "/sf"
+            os.makedirs(relaid_sf)
+            for tbl in TABLE_NAMES:
+                src = f"{SF_DIR}/{tbl}.parquet"
+                dst = f"{relaid_sf}/{tbl}.parquet"
+                if tbl in ("lineitem", "orders", "documents"):
+                    spark.read.parquet(src).repartition(16).write.mode(
+                        "overwrite"
+                    ).parquet(dst)
+                else:
+                    os.symlink(os.path.abspath(src), dst)
+        scaling_relaid: dict[str, float] = {}
+        for name in relaid_queries:
+            walls_r: list[float] = []
+            for _ in range(3):
+                t0 = time.perf_counter()
+                qs[name](spark, relaid_sf).count()
+                walls_r.append(round(time.perf_counter() - t0, 3))
+            scaling_relaid[name] = round(statistics.median(walls_r), 3)
+            print(
+                f"# relaid {name}: trials {walls_r} -> median "
+                f"{scaling_relaid[name]:.2f}s (single-row-group headline: "
+                f"{timings.get(name, float('nan')):.2f}s)",
+                file=sys.stderr,
+            )
+    finally:
+        for d in tmp_dirs:
+            shutil.rmtree(d, ignore_errors=True)
     total = round(sum(timings.values()), 3)
     # Detail line FIRST (trial spreads + host calibration anchors):
     # the driver tail-captures stdout and r4's single fat line got

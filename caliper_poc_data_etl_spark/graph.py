@@ -42,10 +42,12 @@ def truncate_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
     Default (``spark.graft.checkpoint.reliable`` unset/false):
     ``localCheckpoint(eager)`` — executor-storage blocks, no fault
     tolerance for the checkpointed partitions (module docstring).
-    Reliable mode: ``checkpoint(eager)`` to the configured checkpoint
-    dir — survives executor loss at the cost of a distributed write
-    per round. Values are identical either way; tests pin both modes
-    and the once-per-round execution of lazy local checkpoints."""
+    Reliable mode: ``persist().checkpoint(eager)`` to the configured
+    checkpoint dir — survives executor loss at the cost of a
+    distributed write per round. The persist keeps a lazy round from
+    running twice: once for the first action and again for the
+    checkpoint write. Values are identical either way; tests pin both
+    modes and the once-per-round execution of lazy checkpoints."""
     try:
         reliable = (
             df.sparkSession.conf.get("spark.graft.checkpoint.reliable", "false")
@@ -54,7 +56,7 @@ def truncate_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
     except Exception:  # pragma: no cover - conf lookup must never fail a job
         reliable = "false"
     if str(reliable).lower() == "true":
-        return df.checkpoint(eager=eager)
+        return df.persist().checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 
 

@@ -11,7 +11,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from caliper_poc_data_etl_spark.graph import truncate_lineage
 from caliper_poc_data_etl_spark.queries.registry import query, spread, t
+from caliper_poc_data_etl_spark.queries.round6 import _affine_edges, _affine_edges_sql
 
 # ---------------------------------------------------------------------------
 # Subword BPE tokenization
@@ -273,8 +275,6 @@ def _kmeans_final_assignment(spark, sf_dir):
     block-manager cache race duplicating a partition's compute cannot
     diverge. truncate_lineage honors the reliable-checkpoint posture
     switch (graph.py docstring)."""
-    from caliper_poc_data_etl_spark.graph import truncate_lineage
-
     e = t(spark, sf_dir, "embeddings")
     xe = truncate_lineage(
         e.select(
@@ -823,27 +823,16 @@ def dq_benford_digits(spark, sf_dir):
 SSSP_SOURCE = 7
 SSSP_ROUNDS = 6
 
-# Deterministic synthetic weighted edges over documents — the same
-# modular generator family as sql_recursive_cte_bfs (training.py),
-# plus an integer weight derived from the endpoints.
-_SSSP_EDGES_SQL = """
-      SELECT src, dst, (src * 31 + dst * 17) % 97 + 1 AS w FROM (
-        SELECT DISTINCT src, dst FROM (
-          SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst
-          FROM documents, nn
-          UNION ALL
-          SELECT doc_id, (doc_id * 13 + 2) % nn.n FROM documents, nn
-          UNION ALL
-          SELECT doc_id, (doc_id * 29 + 3) % nn.n FROM documents, nn
-        ) WHERE src <> dst
-      )
-"""
-
 
 def _sssp_oracle() -> str:
+    # The affine graph over documents, plus an integer weight derived
+    # from the endpoints.
     head = f"""
-    WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-    edges AS MATERIALIZED ({_SSSP_EDGES_SQL}),
+    WITH nodes AS (SELECT doc_id AS id FROM documents),
+    {_affine_edges_sql("unweighted")},
+    edges AS MATERIALIZED (
+      SELECT src, dst, (src * 31 + dst * 17) % 97 + 1 AS w FROM unweighted
+    ),
     d0 AS (SELECT CAST({SSSP_SOURCE} AS BIGINT) AS node,
                   CAST(0 AS BIGINT) AS dist)"""
     steps = []
@@ -881,33 +870,16 @@ def graph_sssp_bellman_ford(spark, sf_dir):
     Scale shape: per round, one join of the O(|reached|) distance
     frame against the edge list (shuffles on the edge key), one
     min-groupBy — Pregel's message+combine step as two relational
-    ops; lineage truncates per round (localCheckpoint, zero driver
+    ops; lineage truncates per round (truncate_lineage, zero driver
     scalars). At 100 TB the edge list is the big side and the
     distance frame rides broadcast or co-partitioning, exactly like
     dedup_cluster_cc."""
-    d = t(spark, sf_dir, "documents")
-    nn = d.agg(F.count("*").alias("n"))
-    base = d.select("doc_id").crossJoin(F.broadcast(nn))
-    gen = [(7, 1), (13, 2), (29, 3)]
-    parts = [
-        base.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") * a + b) % F.col("n")).alias("dst"),
-        )
-        for a, b in gen
-    ]
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    edges = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .select(
+    edges = truncate_lineage(
+        _affine_edges(spark, sf_dir, "documents", "doc_id").select(
             "src",
             "dst",
             ((F.col("src") * 31 + F.col("dst") * 17) % 97 + 1).alias("w"),
         )
-        .localCheckpoint(eager=True)
     )
     dist = spark.range(1).select(
         F.lit(SSSP_SOURCE).cast("long").alias("node"),
@@ -918,11 +890,8 @@ def graph_sssp_bellman_ford(spark, sf_dir):
             dist.join(edges, dist.node == edges.src)
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+        dist = truncate_lineage(
+            dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
         )
     return dist.select("node", F.col("dist").cast("long").alias("dist"))
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from caliper_poc_data_etl_spark.graph import truncate_lineage
 from caliper_poc_data_etl_spark.queries.registry import query, spread, t
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -649,15 +650,15 @@ LP_ROUNDS = 3
 _LP_GEN = [(7, 1), (13, 2), (29, 3)]
 
 
-def _affine_undirected_edges(spark, sf_dir):
-    """The shared synthetic similarity graph over embedding ids:
-    three affine generators per node, symmetrized, self-loops and
-    duplicates removed, localCheckpoint'ed (it anchors iterative
-    loops). Used by label propagation, k-core, and the clustering
-    coefficient; mirrors the SSSP/CC generator on documents."""
-    e = t(spark, sf_dir, "embeddings")
-    nn = e.agg(F.count("*").alias("n"))
-    base = e.select(F.col("vec_id").alias("id")).crossJoin(F.broadcast(nn))
+def _affine_edges(spark, sf_dir, table="embeddings", id_col="vec_id"):
+    """The shared synthetic graph: one directed edge per node and
+    affine generator in ``_LP_GEN`` (``dst = (id * a + b) % n``),
+    self-loops and duplicates removed. HITS and PPR walk it directed,
+    SSSP over documents weights it, and :func:`_affine_undirected_edges`
+    symmetrizes it. SQL twin: :func:`_affine_edges_sql`."""
+    d = t(spark, sf_dir, table)
+    nn = d.agg(F.count("*").alias("n"))
+    base = d.select(F.col(id_col).alias("id")).crossJoin(F.broadcast(nn))
     parts = [
         base.select(
             F.col("id").alias("src"),
@@ -668,33 +669,52 @@ def _affine_undirected_edges(spark, sf_dir):
     gen = parts[0]
     for p in parts[1:]:
         gen = gen.unionByName(p)
-    gen = gen.filter(F.col("src") != F.col("dst"))
-    return (
-        gen.unionByName(
-            gen.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+    return gen.filter(F.col("src") != F.col("dst")).distinct()
+
+
+def _affine_undirected_edges(spark, sf_dir):
+    """The affine graph over embedding ids with every edge in both
+    directions, checkpointed (it anchors iterative loops). Used by
+    label propagation, k-core, the clustering coefficient, link
+    prediction, random walks and modularity."""
+    edges = _affine_edges(spark, sf_dir)
+    return truncate_lineage(
+        edges.unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct()
     )
 
 
-def _lp_oracle() -> str:
+def _affine_edges_sql(name: str = "edges", *, undirected: bool = False) -> str:
+    """DuckDB twin of :func:`_affine_edges` (or, with ``undirected``,
+    of :func:`_affine_undirected_edges`) as CTEs to follow a ``nodes``
+    CTE with an ``id`` column: ``nn`` (the node count), ``gen`` and the
+    MATERIALIZED edge CTE ``name``; undirected also renders the
+    directed edges as ``{name}_dir``."""
     gens = "\n      UNION ALL\n".join(
-        f"""      SELECT id AS src, (id * {a} + {b}) % n AS dst
-      FROM nodes, nn""" for a, b in _LP_GEN
+        f"      SELECT id AS src, (id * {a} + {b}) % n AS dst FROM nodes, nn"
+        for a, b in _LP_GEN
     )
-    head = f"""
-    WITH nodes AS (SELECT vec_id AS id, label FROM embeddings),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
+    directed = f"{name}_dir" if undirected else name
+    sql = f"""nn AS (SELECT COUNT(*) AS n FROM nodes),
     gen AS (
 {gens}
     ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM gen WHERE src <> dst
-        UNION ALL
-        SELECT dst, src FROM gen WHERE src <> dst)
-    ),
+    {directed} AS MATERIALIZED (
+      SELECT DISTINCT src, dst FROM gen WHERE src <> dst
+    )"""
+    if undirected:
+        sql += f""",
+    {name} AS MATERIALIZED (
+      SELECT src, dst FROM {directed} UNION SELECT dst, src FROM {directed}
+    )"""
+    return sql
+
+
+def _lp_oracle() -> str:
+    head = f"""
+    WITH nodes AS (SELECT vec_id AS id, label FROM embeddings),
+    {_affine_edges_sql(undirected=True)},
     l0 AS (SELECT id AS node, label AS lab FROM nodes)"""
     steps = []
     for i in range(1, LP_ROUNDS + 1):
@@ -728,8 +748,8 @@ def graph_label_propagation(spark, sf_dir):
     in the iterative family.
 
     Each round is one edges⋈labels join + a (node,label) count + an
-    argmax window — all partitioned by node id, with localCheckpoint
-    truncating lineage per round exactly like ``dedup_cluster_cc`` and
+    argmax window — all partitioned by node id, with truncate_lineage
+    checkpointing each round exactly like ``dedup_cluster_cc`` and
     ``graph_sssp_bellman_ford``. Fixed LP_ROUNDS keeps it
     driver-action-free; both engines run the identical integer
     schedule so the oracle is exact."""
@@ -744,11 +764,10 @@ def graph_label_propagation(spark, sf_dir):
             .agg(F.count("*").alias("c"))
         )
         wv = W.partitionBy("src").orderBy(F.desc("c"), "lab")
-        labels = (
+        labels = truncate_lineage(
             votes.withColumn("rn", F.row_number().over(wv))
             .filter(F.col("rn") == 1)
             .select(F.col("src").alias("node"), "lab")
-            .localCheckpoint(eager=True)
         )
     return init.select("node", F.col("lab").alias("l0")).join(
         labels, "node"
@@ -2122,22 +2141,9 @@ KCORE_ROUNDS = 3
 
 
 def _kcore_oracle() -> str:
-    gens = "\n      UNION ALL\n".join(
-        f"""      SELECT id AS src, (id * {a} + {b}) % n AS dst
-      FROM nodes, nn""" for a, b in _LP_GEN
-    )
     head = f"""
     WITH nodes AS (SELECT vec_id AS id FROM embeddings),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    gen AS (
-{gens}
-    ),
-    e0 AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM gen WHERE src <> dst
-        UNION ALL
-        SELECT dst, src FROM gen WHERE src <> dst)
-    )"""
+    {_affine_edges_sql("e0", undirected=True)}"""
     steps = []
     for i in range(1, KCORE_ROUNDS + 1):
         # MATERIALIZED on every e_i: each is referenced twice by the
@@ -2173,7 +2179,7 @@ def graph_kcore_decompose(spark, sf_dir):
 
     Each round: one degree groupBy + two semi-joins to keep edges
     between survivors — all hash-partitioned on node ids,
-    localCheckpoint truncating lineage per round."""
+    truncate_lineage checkpointing each round."""
     edges = _affine_undirected_edges(spark, sf_dir)
     for _ in range(KCORE_ROUNDS):
         keep = (
@@ -2182,10 +2188,9 @@ def graph_kcore_decompose(spark, sf_dir):
             .filter(F.col("deg") >= KCORE_K)
             .select(F.col("src").alias("node"))
         )
-        edges = (
+        edges = truncate_lineage(
             edges.join(keep.select(F.col("node").alias("src")), "src", "left_semi")
             .join(keep.select(F.col("node").alias("dst")), "dst", "left_semi")
-            .localCheckpoint(eager=True)
         )
     return edges.groupBy(F.col("src").alias("vec_id")).agg(
         F.count("*").cast("long").alias("core_degree")
@@ -3148,22 +3153,9 @@ def stream_distinct_users_replay(spark, sf_dir):
 
 
 def _clustering_oracle() -> str:
-    gens = "\n      UNION ALL\n".join(
-        f"""      SELECT id AS src, (id * {a} + {b}) % n AS dst
-      FROM nodes, nn""" for a, b in _LP_GEN
-    )
     return f"""
     WITH nodes AS (SELECT vec_id AS id FROM embeddings),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    gen AS (
-{gens}
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM gen WHERE src <> dst
-        UNION ALL
-        SELECT dst, src FROM gen WHERE src <> dst)
-    ),
+    {_affine_edges_sql(undirected=True)},
     deg AS (SELECT src AS node, COUNT(*) AS d FROM edges GROUP BY src),
     wedge AS (
       SELECT e1.src AS v, e1.dst AS a, e2.dst AS b

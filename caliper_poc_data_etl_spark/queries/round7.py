@@ -15,7 +15,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from caliper_poc_data_etl_spark.graph import truncate_lineage
 from caliper_poc_data_etl_spark.queries.registry import query, spread, t
+from caliper_poc_data_etl_spark.queries.round6 import (
+    _affine_edges_sql,
+    _affine_undirected_edges,
+)
 
 # ---------------------------------------------------------------------------
 # Correlated LATERAL top-k join
@@ -698,24 +703,9 @@ def q12_late_line_priority(spark, sf_dir):
 
 
 def _ra_oracle() -> str:
-    from caliper_poc_data_etl_spark.queries.round6 import _LP_GEN
-
-    gens = "\n      UNION ALL\n".join(
-        f"""      SELECT id AS src, (id * {a} + {b}) % n AS dst
-      FROM nodes, nn""" for a, b in _LP_GEN
-    )
     return f"""
     WITH nodes AS (SELECT vec_id AS id FROM embeddings),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    gen AS (
-{gens}
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM gen WHERE src <> dst
-        UNION ALL
-        SELECT dst, src FROM gen WHERE src <> dst)
-    ),
+    {_affine_edges_sql(undirected=True)},
     deg AS (SELECT src AS z, COUNT(*) AS dz FROM edges GROUP BY src),
     wedge AS (
       SELECT a.dst AS u, a.src AS z, b.dst AS v
@@ -749,10 +739,6 @@ def graph_link_prediction_ra(spark, sf_dir):
     partial-aggregating groupBy on (u, v). Everything hashes on node
     ids; degree is a broadcast-sized dimension at any scale where
     deg ≪ n."""
-    from caliper_poc_data_etl_spark.queries.round6 import (
-        _affine_undirected_edges,
-    )
-
     edges = _affine_undirected_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("z")).agg(F.count("*").alias("dz"))
     ea = edges.select(F.col("src").alias("z"), F.col("dst").alias("u"))
@@ -1614,9 +1600,7 @@ def graph_bipartite_projection(spark, sf_dir):
     fan-out, and here deg(user) ≤ |event types| bounds it by
     construction; degrees broadcast."""
     e = t(spark, sf_dir, "events")
-    ut = e.select("user_id", "event_type").distinct().localCheckpoint(
-        eager=True
-    )
+    ut = truncate_lineage(e.select("user_id", "event_type").distinct())
     deg = ut.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     a = ut.select("user_id", F.col("event_type").alias("t1"))
     b = ut.select("user_id", F.col("event_type").alias("t2"))
@@ -2159,24 +2143,9 @@ WALK_STEPS = 4
 
 
 def _walk_oracle() -> str:
-    from caliper_poc_data_etl_spark.queries.round6 import _LP_GEN
-
-    gens = "\n      UNION ALL\n".join(
-        f"""      SELECT id AS src, (id * {a} + {b}) % n AS dst
-      FROM nodes, nn""" for a, b in _LP_GEN
-    )
     head = f"""
     WITH nodes AS (SELECT vec_id AS id FROM embeddings),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    gen AS (
-{gens}
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM gen WHERE src <> dst
-        UNION ALL
-        SELECT dst, src FROM gen WHERE src <> dst)
-    ),
+    {_affine_edges_sql(undirected=True)},
     ranked AS MATERIALIZED (
       SELECT src, dst,
              ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) AS rn,
@@ -2217,19 +2186,17 @@ def graph_random_walk_deterministic(spark, sf_dir):
     hash-partitioned on the current node, |walks| rows per step, the
     Pregel frontier shape. The walk corpus feeds skip-gram embedding
     training exactly as documents feed ``text_bigram_lm``."""
-    from caliper_poc_data_etl_spark.queries.round6 import (
-        _affine_undirected_edges,
-    )
-
     edges = _affine_undirected_edges(spark, sf_dir)
-    ranked = edges.select(
-        "src",
-        "dst",
-        F.row_number()
-        .over(W.partitionBy("src").orderBy("dst"))
-        .alias("rn"),
-        F.count(F.lit(1)).over(W.partitionBy("src")).alias("deg"),
-    ).localCheckpoint(eager=True)
+    ranked = truncate_lineage(
+        edges.select(
+            "src",
+            "dst",
+            F.row_number()
+            .over(W.partitionBy("src").orderBy("dst"))
+            .alias("rn"),
+            F.count(F.lit(1)).over(W.partitionBy("src")).alias("deg"),
+        )
+    )
     nodes = t(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("start_id")
     )
@@ -2402,7 +2369,7 @@ def text_bpe_train_merges(spark, sf_dir):
     carried as a broadcast cross join into the merge application (a
     plan node, not a driver collect — the documented
     ``EXPECTED_SCALAR_BNLJ`` pattern); the merge applies as a
-    per-row column replace, zero shuffle; localCheckpoint truncates
+    per-row column replace, zero shuffle; truncate_lineage truncates
     the growing lineage. Overlapping-pair counting and left-to-right
     non-overlapping replace are the declared semantics, identical in
     both engines.
@@ -2421,12 +2388,14 @@ def text_bpe_train_merges(spark, sf_dir):
         "^\\||\\|$",
         "",
     )
-    docs = spread(
-        d.select(
-            "doc_id",
-            F.concat(F.lit(" "), F.regexp_replace(w, "(.)", "$1 ")).alias("s"),
-        ).filter(F.trim("s") != "")
-    ).localCheckpoint(eager=True)
+    docs = truncate_lineage(
+        spread(
+            d.select(
+                "doc_id",
+                F.concat(F.lit(" "), F.regexp_replace(w, "(.)", "$1 ")).alias("s"),
+            ).filter(F.trim("s") != "")
+        )
+    )
     merges = None
     for r in range(1, BPE_TRAIN_ROUNDS + 1):
         sy = F.split(F.trim(F.col("s")), " ")
@@ -2462,9 +2431,7 @@ def text_bpe_train_merges(spark, sf_dir):
         repl = F.concat(F.lit(" "), F.col("a"), F.col("b"), F.lit(" "))
         for _ in range(_BPE_TRAIN_SWEEPS):
             s = F.replace(s, search, repl)
-        docs = applied.select("doc_id", s.alias("s")).localCheckpoint(
-            eager=True
-        )
+        docs = truncate_lineage(applied.select("doc_id", s.alias("s")))
         m = top.select(
             F.col("rank").cast("long").alias("rank"),
             F.col("a").alias("left_sym"),

@@ -13,7 +13,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from caliper_poc_data_etl_spark.graph import truncate_lineage
 from caliper_poc_data_etl_spark.queries.registry import query, t
+from caliper_poc_data_etl_spark.queries.round6 import (
+    _affine_edges,
+    _affine_edges_sql,
+    _affine_undirected_edges,
+)
 from caliper_poc_data_etl_spark.queries.round7 import _soundex_sql
 
 # ---------------------------------------------------------------------------
@@ -110,24 +116,22 @@ def sim_mmr_select(spark, sf_dir):
             lambda acc, v: acc + v,
         )
 
-    rel = (
+    rel = truncate_lineage(
         z.crossJoin(F.broadcast(qv))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("vec_id", dot(F.col("q_e"), F.col("e")).alias("rel"), "e")
         .orderBy(F.desc("rel"), "vec_id")
         .limit(MMR_CAND)
-        .localCheckpoint(eager=True)
     )
     pa = rel.select(F.col("vec_id").alias("ia"), F.col("e").alias("ea"))
     pb = rel.select(F.col("vec_id").alias("ib"), F.col("e").alias("eb"))
-    pair = (
+    pair = truncate_lineage(
         pa.crossJoin(pb)
         .filter(F.col("ia") != F.col("ib"))
         .select("ia", "ib", dot(F.col("ea"), F.col("eb")).alias("s"))
-        .localCheckpoint(eager=True)
     )
     relc = rel.select("vec_id", "rel")
-    picked = (
+    picked = truncate_lineage(
         relc.select(
             F.lit(1).cast("long").alias("sel_rank"),
             "vec_id",
@@ -136,7 +140,6 @@ def sim_mmr_select(spark, sf_dir):
         )
         .orderBy(F.desc("score"), "vec_id")
         .limit(1)
-        .localCheckpoint(eager=True)
     )
     for r in range(2, MMR_K + 1):
         seln = picked.select(F.col("vec_id").alias("ib"))
@@ -162,7 +165,7 @@ def sim_mmr_select(spark, sf_dir):
             .orderBy(F.desc("score"), "vec_id")
             .limit(1)
         )
-        picked = picked.unionByName(pick).localCheckpoint(eager=True)
+        picked = truncate_lineage(picked.unionByName(pick))
     return picked
 
 
@@ -1695,20 +1698,9 @@ HITS_SCALE = 1_000_000
 
 
 def _hits_oracle() -> str:
-    from caliper_poc_data_etl_spark.queries.round6 import _LP_GEN
-
-    gens = "\n      UNION ALL\n".join(
-        f"""      SELECT id AS src, (id * {a} + {b}) % n AS dst
-      FROM nodes, nn""" for a, b in _LP_GEN
-    )
     head = f"""
     WITH nodes AS (SELECT vec_id AS id FROM embeddings),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-{gens}
-      ) WHERE src <> dst
-    ),
+    {_affine_edges_sql()},
     h0 AS (SELECT id AS node, {HITS_SCALE} AS v FROM nodes)"""
     steps = []
     for r in range(1, HITS_ROUNDS + 1):
@@ -1757,28 +1749,16 @@ def graph_hits_scores(spark, sf_dir):
     checkpointed edge list + one partial-aggregating groupBy + a
     1-row max scalar as a broadcast plan node (never a driver
     collect) — the Pregel message/combine shape at |V| rows."""
-    from caliper_poc_data_etl_spark.queries.round6 import _LP_GEN
-
     emb = t(spark, sf_dir, "embeddings")
     nodes = emb.select(F.col("vec_id").alias("node"))
-    n_df = nodes.agg(F.count(F.lit(1)).alias("n"))
-    gen = None
-    for a_c, b_c in _LP_GEN:
-        g = nodes.crossJoin(F.broadcast(n_df)).select(
-            F.col("node").alias("src"),
-            ((F.col("node") * a_c + b_c) % F.col("n")).alias("dst"),
-        )
-        gen = g if gen is None else gen.unionByName(g)
-    edges = (
-        gen.filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = truncate_lineage(_affine_edges(spark, sf_dir))
 
     def _norm(df):
         m = df.agg(F.max("v").alias("m"))
-        return df.crossJoin(F.broadcast(m)).select(
-            "node", F.expr(f"v * {HITS_SCALE} div m").alias("v")
+        return truncate_lineage(
+            df.crossJoin(F.broadcast(m)).select(
+                "node", F.expr(f"v * {HITS_SCALE} div m").alias("v")
+            )
         )
 
     h = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("v"))
@@ -1793,7 +1773,7 @@ def graph_hits_scores(spark, sf_dir):
             nodes.join(a_raw, "node", "left").select(
                 "node", F.coalesce("v", F.lit(0)).alias("v")
             )
-        ).localCheckpoint(eager=True)
+        )
         h_raw = (
             edges.join(a.withColumnRenamed("node", "dst"), "dst")
             .groupBy(F.col("src").alias("node"))
@@ -1803,7 +1783,7 @@ def graph_hits_scores(spark, sf_dir):
             nodes.join(h_raw, "node", "left").select(
                 "node", F.coalesce("v", F.lit(0)).alias("v")
             )
-        ).localCheckpoint(eager=True)
+        )
     return h.select(F.col("node").alias("vec_id"), F.col("v").alias("hub_micro")).join(
         a.select(F.col("node").alias("vec_id"), F.col("v").alias("auth_micro")),
         "vec_id",
@@ -2076,21 +2056,10 @@ PPR_DAMP_DEN = 100
 
 
 def _ppr_oracle() -> str:
-    from caliper_poc_data_etl_spark.queries.round6 import _LP_GEN
-
-    gens = "\n        UNION ALL\n".join(
-        f"""        SELECT id AS src, (id * {a} + {b}) % n AS dst
-        FROM nodes, nn""" for a, b in _LP_GEN
-    )
     head = f"""
     WITH nodes AS (SELECT vec_id AS id FROM embeddings),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
     seed AS (SELECT MIN(id) AS s FROM nodes),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-{gens}
-      ) WHERE src <> dst
-    ),
+    {_affine_edges_sql()},
     deg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
     r0 AS (
       SELECT id AS node,
@@ -2135,31 +2104,14 @@ def graph_personalized_pagerank(spark, sf_dir):
     partial-aggregating groupBy, a left join back to carry zero-mass
     nodes — the Pregel shape at |V| rows; 3 fixed rounds, zero driver
     scalars."""
-    from caliper_poc_data_etl_spark.queries.round6 import _LP_GEN
-
     emb = t(spark, sf_dir, "embeddings")
     nodes = emb.select(F.col("vec_id").alias("node"))
-    n_df = nodes.agg(
-        F.count(F.lit(1)).alias("n"), F.min("node").alias("s")
+    seeded = nodes.crossJoin(
+        F.broadcast(nodes.agg(F.min("node").alias("seed_id")))
     )
-    base = nodes.crossJoin(F.broadcast(n_df))
-    gen = None
-    for a_c, b_c in _LP_GEN:
-        g = base.select(
-            F.col("node").alias("src"),
-            ((F.col("node") * a_c + b_c) % F.col("n")).alias("dst"),
-        )
-        gen = g if gen is None else gen.unionByName(g)
-    edges = (
-        gen.filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = truncate_lineage(_affine_edges(spark, sf_dir))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = edges.join(deg, "src").localCheckpoint(eager=True)
-    seeded = base.select(
-        "node", F.col("s").alias("seed_id")
-    )
+    ed = truncate_lineage(edges.join(deg, "src"))
     teleport = (
         F.when(
             F.col("node") == F.col("seed_id"),
@@ -2185,9 +2137,8 @@ def graph_personalized_pagerank(spark, sf_dir):
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").alias("mass"))
         )
-        r = (
-            seeded.join(mass, "node", "left")
-            .select(
+        r = truncate_lineage(
+            seeded.join(mass, "node", "left").select(
                 "node",
                 "seed_id",
                 (
@@ -2198,7 +2149,6 @@ def graph_personalized_pagerank(spark, sf_dir):
                     + teleport
                 ).cast("long").alias("v"),
             )
-            .localCheckpoint(eager=True)
         )
     return r.select("node", "v").select(
         F.col("node").alias("vec_id"), F.col("v").alias("ppr_micro")
@@ -2791,24 +2741,9 @@ MOD_MICRO = 1_000_000
 
 
 def _modularity_oracle() -> str:
-    from caliper_poc_data_etl_spark.queries.round6 import _LP_GEN
-
-    gens = "\n        UNION ALL\n".join(
-        f"""        SELECT id AS src, (id * {a} + {b}) % n AS dst
-        FROM nodes, nn""" for a, b in _LP_GEN
-    )
     return f"""
     WITH nodes AS (SELECT vec_id AS id, label FROM embeddings),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    eu AS (
-      SELECT DISTINCT src, dst FROM (
-{gens}
-      ) WHERE src <> dst
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM eu UNION ALL SELECT dst, src FROM eu)
-    ),
+    {_affine_edges_sql(undirected=True)},
     lab AS (
       SELECT e.src, e.dst, a.label AS la, b.label AS lb
       FROM edges e
@@ -2855,10 +2790,6 @@ def graph_modularity_score(spark, sf_dir):
     hash join, one groupBy, a broadcast 1-row T scalar — modularity
     of any partition at any scale is two joins and an aggregate, no
     per-community iteration."""
-    from caliper_poc_data_etl_spark.queries.round6 import (
-        _affine_undirected_edges,
-    )
-
     emb = t(spark, sf_dir, "embeddings")
     nodes = emb.select(F.col("vec_id").alias("id"), "label")
     edges = _affine_undirected_edges(spark, sf_dir)

@@ -13,6 +13,7 @@ import random
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from caliper_poc_data_etl_spark.graph import truncate_lineage
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 TOP_K = 5
@@ -958,7 +959,7 @@ def embed_top_pc_power_iter(spark, sf_dir):
     truncates per round (graph.pagerank discipline, zero driver
     scalars)."""
     e = t(spark, sf_dir, "embeddings")
-    xe = (
+    xe = truncate_lineage(
         e.select(
             "vec_id",
             F.posexplode(
@@ -967,20 +968,20 @@ def embed_top_pc_power_iter(spark, sf_dir):
                     lambda x: F.round(x.cast("double") * 1000).cast("long"),
                 )
             ).alias("j0", "x"),
-        )
-        .select("vec_id", (F.col("j0") + 1).alias("j"), "x")
-        .localCheckpoint(eager=True)
+        ).select("vec_id", (F.col("j0") + 1).alias("j"), "x")
     )
     nn = xe.agg(F.countDistinct("vec_id").alias("n"))
-    dd = nn.select(
-        F.pow(F.lit(10), F.length(F.col("n").cast("string")))
-        .cast("decimal(38,0)")
-        .alias("d")
-    ).localCheckpoint(eager=True)
-    m = (
-        spark.range(1, 65)
-        .select(F.col("id").alias("j"), F.lit(1000).cast("long").alias("m"))
-        .localCheckpoint(eager=True)
+    dd = truncate_lineage(
+        nn.select(
+            F.pow(F.lit(10), F.length(F.col("n").cast("string")))
+            .cast("decimal(38,0)")
+            .alias("d")
+        )
+    )
+    m = truncate_lineage(
+        spark.range(1, 65).select(
+            F.col("id").alias("j"), F.lit(1000).cast("long").alias("m")
+        )
     )
     for _ in range(PI_ITERS):
         s = (
@@ -1035,15 +1036,13 @@ def embed_top_pc_power_iter(spark, sf_dir):
                 )
             ).alias("nrm")
         )
-        m = (
-            wr.crossJoin(F.broadcast(nrm))
-            .select(
+        m = truncate_lineage(
+            wr.crossJoin(F.broadcast(nrm)).select(
                 "j",
                 F.floor(1000 * F.col("wr") / F.col("nrm") + F.lit(0.5))
                 .cast("long")
                 .alias("m"),
             )
-            .localCheckpoint(eager=True)
         )
     top_sign = (
         m.orderBy(F.abs(F.col("m")).desc(), "j")

@@ -1,19 +1,24 @@
 """Checkpoint-posture tests (VERDICT r12 #7).
 
-Pins the two claims the iterative operators' lazy localCheckpoints
-rest on:
+Pins the claims the iterative operators' lazy checkpoints rest on:
 
-1. **Once-per-round execution**: a lazy localCheckpoint dedupes its
-   downstream references — each round's plan executes exactly once
-   even though two later operators read it (asserted with a Python
-   accumulator bumped per processed row inside the round).
+1. **Once-per-round execution**: a lazy checkpoint from
+   :func:`graph.truncate_lineage` dedupes its downstream references in
+   both postures — each round's plan executes exactly once even though
+   two later operators read it (asserted with a Python accumulator
+   bumped per processed row inside the round).
 2. **The reliable-mode switch**: with
    ``spark.graft.checkpoint.reliable=true`` (+ a checkpoint dir),
    :func:`graph.truncate_lineage` routes to reliable ``checkpoint()``
    and the graded iterative queries produce identical values.
+3. **One switch**: no package module but ``graph.py`` checkpoints a
+   DataFrame itself, so the posture switch reaches every loop.
 """
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,12 +29,16 @@ from caliper_poc_data_etl_spark.graph import truncate_lineage
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_lazy_rounds_execute_once(spark):
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+def test_lazy_rounds_execute_once(spark, tmp_path, reliable):
     """Two downstream consumers of a lazy-checkpointed round must not
     re-execute the round's plan: the accumulator counts row-level
     evaluations of the round body, which must equal rows x rounds
-    (not 2x) after the final action."""
+    (not 2x) after the final action. Reliable mode must persist the
+    round, or the checkpoint write runs it again."""
     sc = spark.sparkContext
+    if reliable:
+        sc.setCheckpointDir(str(tmp_path / "ck"))
     acc = sc.accumulator(0)
 
     @F.udf(T.LongType())
@@ -41,17 +50,21 @@ def test_lazy_rounds_execute_once(spark):
     labels = spark.range(n_rows).select(
         F.col("id").alias("node"), F.col("id").alias("lbl")
     )
-    for _ in range(n_rounds):
-        # the round body: every row passes through the counting UDF,
-        # then the result is lazily checkpointed and consumed TWICE
-        # (self-join), like the CC/kmeans rounds' double references.
-        stepped = labels.select("node", bump(F.col("lbl")).alias("lbl"))
-        ck = stepped.localCheckpoint(eager=False)
-        labels = ck.alias("a").join(
-            ck.select(F.col("node").alias("node2"), F.col("lbl").alias("lbl2")),
-            F.col("node") == F.col("node2"),
-        ).select("node", F.least("lbl", "lbl2").alias("lbl"))
-    assert labels.count() == n_rows
+    spark.conf.set("spark.graft.checkpoint.reliable", str(reliable).lower())
+    try:
+        for _ in range(n_rounds):
+            # the round body: every row passes through the counting UDF,
+            # then the result is lazily checkpointed and consumed TWICE
+            # (self-join), like the CC/kmeans rounds' double references.
+            stepped = labels.select("node", bump(F.col("lbl")).alias("lbl"))
+            ck = truncate_lineage(stepped, eager=False)
+            labels = ck.alias("a").join(
+                ck.select(F.col("node").alias("node2"), F.col("lbl").alias("lbl2")),
+                F.col("node") == F.col("node2"),
+            ).select("node", F.least("lbl", "lbl2").alias("lbl"))
+        assert labels.count() == n_rows
+    finally:
+        spark.conf.set("spark.graft.checkpoint.reliable", "false")
     # each round evaluated each row exactly once despite two consumers
     assert acc.value == n_rows * n_rounds
 
@@ -77,11 +90,22 @@ def test_truncate_lineage_reliable_mode_value_identical(spark, tmp_path):
     assert ck_files, "reliable mode must write to the checkpoint dir"
 
 
-@pytest.mark.parametrize("qname", ["er_phonetic_cluster_cc", "graph_pagerank"])
+@pytest.mark.parametrize(
+    "qname",
+    [
+        "er_phonetic_cluster_cc",
+        "graph_pagerank",
+        "graph_sssp_bellman_ford",
+        "graph_kcore_decompose",
+        "graph_hits_scores",
+        "embed_top_pc_power_iter",
+    ],
+)
 def test_iterative_queries_identical_under_reliable_mode(spark, tmp_path, qname):
-    """The CC / pagerank graded queries give identical results under
-    the reliable-checkpoint posture (the 100 TB fault-tolerant
-    deployment shape) as under the default local checkpoints."""
+    """The iterative graded queries (CC, pagerank, SSSP, k-core, HITS,
+    power iteration) give identical results under the
+    reliable-checkpoint posture (the 100 TB fault-tolerant deployment
+    shape) as under the default local checkpoints."""
     import __spark_entry__ as entry
 
     qs = entry.queries()
@@ -94,3 +118,22 @@ def test_iterative_queries_identical_under_reliable_mode(spark, tmp_path, qname)
     finally:
         spark.conf.set("spark.graft.checkpoint.reliable", "false")
     assert hardened == base
+
+
+def test_only_graph_module_checkpoints():
+    """Every lineage checkpoint goes through graph.truncate_lineage:
+    a direct ``localCheckpoint(...)``/``checkpoint(...)`` call anywhere
+    else in the package would ignore ``spark.graft.checkpoint.reliable``."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "caliper_poc_data_etl_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "graph.py" and path.parent == pkg:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                hits.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not hits, f"checkpoint calls outside graph.py: {hits}"

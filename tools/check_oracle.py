@@ -1,13 +1,16 @@
-"""Local replica of the driver's correctness gate.
+"""Oracle check over the whole registry.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
-on DuckDB over the same parquet tables, then compares row count,
-column names, and order-insensitive values (floats with tolerance).
+Runs every ``queries()`` entry (or every entry whose name contains one
+of the filters) on Spark and its ``oracle_sql()`` twin on DuckDB over
+the same parquet tables, then compares row count, column names, and
+order-insensitive values (floats with tolerance). Registry order does
+not matter: every selected entry is checked.
 
 Usage:
     python tools/check_oracle.py            # all queries @ sf0.01
     python tools/check_oracle.py q1 fn_date_pack   # substring filters
     python tools/check_oracle.py --vanilla  # driver-like plain SparkSession
+    python tools/check_oracle.py --json=out.json   # also write a JSON record
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python tools/check_oracle.py
 
 ``--vanilla`` builds a bare SparkSession with none of session.py's
@@ -123,18 +126,11 @@ def main() -> int:
     json_out = next(
         (a.split("=", 1)[1] for a in args if a.startswith("--json=")), None
     )
-    head_n = next(
-        (int(a.split("=", 1)[1]) for a in args if a.startswith("--head=")), None
-    )
     filters = [a for a in args if not a.startswith("--")]
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    if head_n is not None:
-        # The driver grades the FIRST N registry entries (N=50); --head
-        # replicates exactly that window for pre-snapshot verification.
-        qs = {k: qs[k] for k in list(qs)[:head_n]}
     if filters:
         qs = {k: v for k, v in qs.items() if any(f in k for f in filters)}
 
